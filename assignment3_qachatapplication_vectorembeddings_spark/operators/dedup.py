@@ -973,8 +973,10 @@ def connected_components(
 
     Two physical paths, identical results:
 
-    - edge set ≤ ``driver_threshold``: collect + union-find on the
-      driver (near-dup graphs are minuscule next to the corpus — even
+    - raw pair rows ≤ ``driver_threshold`` (the gate counts ``pairs``
+      rows as given, before any reversal or de-duplication, so a pair
+      list that repeats an edge spends the budget twice): collect +
+      union-find on the driver (near-dup graphs are minuscule next to the corpus — even
       at 100 TB a dup-pair list is broadcast-scale; iterating Spark
       jobs for it wastes whole seconds of fixed overhead per round);
     - larger: distributed min-label propagation to fixpoint —

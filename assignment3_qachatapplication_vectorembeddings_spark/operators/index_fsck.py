@@ -12,13 +12,16 @@ Report vocabulary:
 - **errors** — protocol violations: a meta/manifest references a
   directory that does not exist (a reader resolving it would crash),
   an unparseable NEWEST manifest with no complete fallback, a revoked
-  map naming unassigned segments. A healthy index NEVER has errors,
-  even mid-maintenance.
+  map naming unassigned segments, a newest derived meta whose
+  ``format_version`` the engine does not serve. A healthy index NEVER
+  has errors, even mid-maintenance.
 - **warnings** — reclaimable or transient states: orphan generation /
   segment / quantizer dirs (vacuum fodder; also what an in-flight
   writer looks like from outside), expired lease files, a derived
   index whose indexed primary snapshot has been vacuumed (serving
-  re-rank would fail LOUDLY — documented behavior, but worth seeing).
+  re-rank would fail LOUDLY — documented behavior, but worth seeing),
+  a superseded meta of another ``format_version`` (left behind by a
+  rebuild in place; readers never resolve it).
 - **info** — version counts, live title/segment totals, lease counts.
 
 Usage::
@@ -34,6 +37,8 @@ from __future__ import annotations
 
 import json
 from datetime import datetime, timezone
+
+from .index_sync import FORMAT_VERSION
 
 __all__ = ["fsck_primary", "fsck_derived"]
 
@@ -193,6 +198,7 @@ def fsck_derived(index, *, deep: bool = False) -> dict:
 
     listing = set(vindex._list_dir(index.path))
     metas: dict[int, dict] = {}
+    foreign: dict[int, object] = {}  # meta version -> its format_version
     for v in versions:
         payload = _parse_json(
             vindex._read_small_file(f"{index.meta_dir}/{index._meta_name(v)}")
@@ -207,11 +213,19 @@ def fsck_derived(index, *, deep: bool = False) -> dict:
             else:
                 report["warnings"].append(f"meta v{v} torn and superseded")
             continue
+        if payload.get("format_version") != FORMAT_VERSION:
+            foreign[v] = payload.get("format_version")
+            continue
         assign = payload.get("assign")
-        if not isinstance(assign, dict) or "data_version" not in payload:
+        revoked = payload.get("revoked")
+        if not (
+            isinstance(assign, dict)
+            and isinstance(revoked, dict)
+            and "data_version" in payload
+        ):
             report["errors"].append(
-                f"meta v{v} parses but is missing a usable 'assign' map "
-                "or 'data_version' — corrupt metadata"
+                f"meta v{v} parses but is missing a usable 'assign' or "
+                "'revoked' map or 'data_version' — corrupt metadata"
             )
             continue
         metas[v] = payload
@@ -241,13 +255,23 @@ def fsck_derived(index, *, deep: bool = False) -> dict:
                     f"meta v{v} has a malformed seg_quantizer entry "
                     f"for {seg!r}: {sq!r}"
                 )
-        revoked = payload.get("revoked")
-        if revoked is not None:
-            extra = sorted(set(revoked) - set(assign.values()))
-            if extra:
-                report["errors"].append(
-                    f"meta v{v} revoked-map names unassigned segment(s) {extra}"
-                )
+        extra = sorted(set(revoked) - set(assign.values()))
+        if extra:
+            report["errors"].append(
+                f"meta v{v} revoked-map names unassigned segment(s) {extra}"
+            )
+    for v, found in sorted(foreign.items()):
+        # readers resolve the newest parseable meta and refuse it when
+        # its layout is foreign; an older foreign meta is what a rebuild
+        # in place leaves behind until vacuum drops it
+        msg = (
+            f"meta v{v} has format_version {found!r}; engine supports "
+            f"{FORMAT_VERSION}"
+        )
+        if v > max(metas, default=-1):
+            report["errors"].append(f"{msg} — readers refuse it; build() again")
+        else:
+            report["warnings"].append(f"{msg} and is superseded (vacuum fodder)")
 
     if metas:
         head_v = max(metas)
@@ -302,12 +326,10 @@ def fsck_derived(index, *, deep: bool = False) -> dict:
             if index.KIND == "ivfpq":
                 frames = index._segment_frames(head, "", index.SEGMENT_SCHEMA)
             else:
-                # layout-agnostic per-doc rows (sentinel partition or
-                # legacy doclens sidecar — round-10 fused write)
-                frames = index._doclens_frames(head)
+                frames = index._doclens_frames(head)  # one row per doc
             served_frames = []
-            for df, ts, rv in frames:
-                cond = index._serving_filter(ts, rv)
+            for df, _ts, rv in frames:
+                cond = index._serving_filter(rv)
                 sdf = df.filter(cond) if cond is not None else df
                 served_frames.append(sdf.select("id"))
             if served_frames:

@@ -77,6 +77,10 @@ __all__ = ["SyncedIvfpqIndex", "SyncedTextIndex", "StaleIndexError"]
 
 _log = logging.getLogger(__name__)
 
+#: on-disk layout of a synced-index meta and the segments it references,
+#: stamped into every meta at publish; any other value is refused on read
+FORMAT_VERSION = 1
+
 
 class _SyncedIndexBase:
     """Meta-file plumbing shared by the ANN and text synced indexes.
@@ -85,7 +89,9 @@ class _SyncedIndexBase:
     published create-if-absent (reusing the VectorIndex's filesystem
     helpers, so the same atomic-create / conditional-put contract
     applies). Readers resolve the highest complete meta once per
-    query — snapshot isolation for the index itself.
+    query — snapshot isolation for the index itself. Every meta carries
+    ``format_version``; :meth:`_load_meta` refuses any other layout, and
+    :meth:`build` rebuilds in place over a refused one.
     """
 
     KIND = "base"
@@ -94,6 +100,7 @@ class _SyncedIndexBase:
         self.vindex = vindex
         self.path = path.rstrip("/")
         self.meta_dir = f"{self.path}/_meta"
+        self._meta_parse_cache: dict[int, dict] = {}
 
     # -- meta commit log ----------------------------------------------------
 
@@ -111,6 +118,12 @@ class _SyncedIndexBase:
                     continue
         return sorted(out)
 
+    def _next_meta_version(self) -> int:
+        # from the listing, not a parsed payload: build() must be able
+        # to publish over a meta that _load_meta refuses
+        versions = self._meta_versions()
+        return versions[-1] + 1 if versions else 1
+
     def _load_meta(self) -> dict | None:
         # metas are immutable once published (create-if-absent), so the
         # O(titles) JSON parse is cached per instance keyed by version —
@@ -121,9 +134,7 @@ class _SyncedIndexBase:
         # gets a private copy, not a poisoned shared cache entry.
         import copy
 
-        cache = getattr(self, "_meta_parse_cache", None)
-        if cache is None:
-            cache = self._meta_parse_cache = {}
+        cache = self._meta_parse_cache
         for version in reversed(self._meta_versions()):
             hit = cache.get(version)
             if hit is not None:
@@ -137,6 +148,14 @@ class _SyncedIndexBase:
                 payload = json.loads(data)
             except ValueError:
                 continue  # torn write of the newest meta: fall back one
+            found = payload.get("format_version")
+            if found != FORMAT_VERSION:
+                raise ValueError(
+                    f"{self.KIND} index meta {self.meta_dir}/"
+                    f"{self._meta_name(version)} has format_version "
+                    f"{found!r}; engine supports {FORMAT_VERSION} — "
+                    "build() the index again at this path"
+                )
             payload["meta_version"] = version
             cache[version] = payload
             for v in sorted(cache)[:-4]:
@@ -176,6 +195,7 @@ class _SyncedIndexBase:
         payload = dict(
             payload,
             kind=self.KIND,
+            format_version=FORMAT_VERSION,
             meta_version=version,
             committed_utc=datetime.now(timezone.utc).isoformat(),
         )
@@ -489,9 +509,7 @@ class _SyncedIndexBase:
     @staticmethod
     def _quantizer_stamp(name: str) -> float | None:
         """age_sec parsed from ``quantizer-t<ms>-<qid>``; None for
-        names this engine didn't write (legacy fixed-path sidecars are
-        named ``quantizer_centroids``/``quantizer_codebooks`` — no
-        ``-`` — and never match the ``quantizer-`` prefix)."""
+        names this engine didn't write."""
         parts = name.split("-")
         if len(parts) < 2 or not parts[1].startswith("t"):
             return None
@@ -516,26 +534,23 @@ class _SyncedIndexBase:
         skips parquet footer inference — without it every serving query
         pays one driver job PER SEGMENT just to learn a layout this
         module wrote itself (round-6: serving-path plan construction is
-        job-free). ``revoked`` is ``None`` for legacy metas (caller
-        must filter by the assigned list). ``names=True`` prepends the
-        segment dir name to each tuple (per-segment quantizer routing
-        needs it; default stays 3-tuples for existing callers)."""
+        job-free). ``names=True`` prepends the segment dir name to each
+        tuple (per-segment quantizer routing needs it; default stays
+        3-tuples for existing callers)."""
         by_seg: dict[str, list[str]] = {}
         for t, seg in meta["assign"].items():
             by_seg.setdefault(seg, []).append(t)
-        revoked_map = meta.get("revoked")
         spark = self.vindex.spark
         out = []
         for seg, titles in sorted(by_seg.items()):
             p = f"{self.path}/{seg}" + (f"/{subdir}" if subdir else "")
             reader = spark.read.schema(schema) if schema else spark.read
-            revoked = None if revoked_map is None else revoked_map.get(seg, [])
-            row = (reader.parquet(p), titles, revoked)
+            row = (reader.parquet(p), titles, meta["revoked"].get(seg, []))
             out.append((seg, *row) if names else row)
         return out
 
     @staticmethod
-    def _serving_filter(assigned: list[str], revoked: list[str] | None):
+    def _serving_filter(revoked: list[str]):
         """Cheapest EXACT live-rows predicate for one segment read. A
         segment contains only rows of titles written into it, and a
         title once repointed away never returns — so the live rows are
@@ -544,25 +559,17 @@ class _SyncedIndexBase:
         literal list, which at 100 TB (millions of titles per segment)
         would blow up the plan before the scan even starts. Zero churn
         (every segment right after build/compact) means NO filter at
-        all. ``revoked=None`` (pre-round-6 meta) falls back to the
-        assigned-list filter."""
-        if revoked is None:
-            return F.col("title").isin(list(assigned))
+        all."""
         if revoked:
             return ~F.col("title").isin(list(revoked))
         return None
 
     def _update_revoked(
         self, meta: dict, assign_new: dict, moved: Sequence[str]
-    ) -> dict | None:
+    ) -> dict:
         """Next meta's {segment: [revoked titles]} after ``moved``
         titles (changed or removed) left their old segments. Entries
-        for segments no longer assigned are dropped (vacuum fodder).
-        A legacy meta (no ``revoked`` key) has unknown churn history —
-        stay legacy (return None; serving keeps the assigned-list
-        filter) until a build()/compact() resets the baseline."""
-        if meta.get("revoked") is None:
-            return None
+        for segments no longer assigned are dropped (vacuum fodder)."""
         old_assign = meta["assign"]
         revoked: dict[str, list[str]] = {
             s: list(v) for s, v in meta["revoked"].items()
@@ -595,7 +602,7 @@ class _SyncedIndexBase:
         by_seg: dict[str, int] = {}
         for _t, seg in m["assign"].items():
             by_seg[seg] = by_seg.get(seg, 0) + 1
-        revoked = m.get("revoked") or {}
+        revoked = m["revoked"]
         out = {
             "kind": self.KIND,
             "built": True,
@@ -632,15 +639,12 @@ class _SyncedIndexBase:
         m = self._load_meta()
         if m is None:
             return None
-        generations = {
-            tuple(q)
-            for q in (
-                getattr(self, "_seg_quantizer_map", lambda _m: {})(m) or {}
-            ).values()
-        }
+        # text metas pin no quantizers: one generation
+        pins = m.get("seg_quantizer", {}).values()
+        generations = len({tuple(q) for q in pins}) or 1
         if (
             len(set(m["assign"].values())) <= max_segments
-            and len(generations) <= max_generations
+            and generations <= max_generations
         ):
             return None
         if self.is_stale():
@@ -654,10 +658,14 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
 
     Layout::
 
-        {path}/_meta/v*.json                  # versioned meta commits
-        {path}/quantizer_centroids/           # frozen at build()
-        {path}/quantizer_codebooks/
-        {path}/seg-v*-<nonce>/cluster=<c>/    # immutable code segments
+        {path}/_meta/v*.json                          # versioned meta commits
+        {path}/quantizer-t<ms>-<qid>/centroids/       # one dir per build()/
+        {path}/quantizer-t<ms>-<qid>/codebooks/       # retrain(), never rewritten
+        {path}/seg-v*-t<ms>-<nonce>/cluster=<c>/      # immutable code segments
+
+    The meta names the head quantizer (``quantizer_id``/
+    ``quantizer_dir``) and pins every live segment to the quantizer
+    that encoded it (``seg_quantizer``).
     """
 
     KIND = "ivfpq"
@@ -691,6 +699,8 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
             seed,
         )
         self.drift_threshold = drift_threshold
+        # {quantizer_id: (centroids, codebooks)}, see _load_quantizer
+        self._quantizer_cache_map: dict[str, tuple] = {}
 
     # -- quantizer drift guard ------------------------------------------------
 
@@ -758,16 +768,17 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
         return f"quantizer-t{int(time.time() * 1000):016d}-{quantizer_id}"
 
     def _write_quantizer(
-        self,
-        centroids: np.ndarray,
-        codebooks: np.ndarray,
-        quantizer_dir: str,
-    ) -> None:
+        self, centroids: np.ndarray, codebooks: np.ndarray
+    ) -> tuple[str, str]:
         """Write the quantizer sidecars into a fresh VERSIONED dir
         (``quantizer-t<ms>-<qid>/``) — never overwriting in place, so a
         leased reader loading the previous quantizer can never observe
-        a torn parquet mid-rebuild. The meta's ``quantizer_dir`` points
-        serving at the right one; vacuum reclaims unreferenced dirs."""
+        a torn parquet mid-rebuild — and seed the load cache with it.
+        Returns ``(quantizer_id, quantizer_dir)`` for the meta, which
+        points serving at the right dir; vacuum reclaims unreferenced
+        dirs."""
+        quantizer_id = uuid.uuid4().hex[:12]
+        quantizer_dir = self._new_quantizer_dir(quantizer_id)
         spark = self.vindex.spark
         base = f"{self.path}/{quantizer_dir}"
         cent_rows = [(int(i), [float(v) for v in c]) for i, c in enumerate(centroids)]
@@ -783,11 +794,21 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
         spark.createDataFrame(
             cb_rows, "subspace int, code int, centroid array<double>"
         ).write.mode("overwrite").parquet(f"{base}/codebooks")
+        self._cache_quantizer(quantizer_id, (centroids, codebooks))
+        return quantizer_id, quantizer_dir
+
+    def _cache_quantizer(self, quantizer_id: str, quantizer: tuple) -> None:
+        # small keyed cache (not a single slot): partial retrain makes
+        # MULTIPLE quantizers live at once — per-segment pinning — and a
+        # single-entry cache would thrash reloading two quantizers on
+        # every mixed-generation search
+        cache = self._quantizer_cache_map
+        cache[quantizer_id] = quantizer
+        while len(cache) > 4:  # bound: a handful of generations max
+            cache.pop(next(iter(cache)))
 
     def _load_quantizer(
-        self,
-        quantizer_id: str | None = None,
-        quantizer_dir: str | None = None,
+        self, quantizer_id: str, quantizer_dir: str
     ) -> tuple[np.ndarray, np.ndarray]:
         # the quantizer is FROZEN between build()/retrain() calls, so
         # one load serves every search/refresh on this instance (two
@@ -795,54 +816,40 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
         # meta's quantizer_id: an external rebuild (new id in the meta
         # this caller just resolved) misses the cache and reloads, so a
         # long-lived server instance can never score against a
-        # superseded quantizer. ``quantizer_dir`` (meta key since round
-        # 7) selects the versioned sidecar dir; a legacy meta without it
-        # reads the original fixed paths.
-        # small keyed cache (not a single slot): partial retrain makes
-        # MULTIPLE quantizers live at once — per-segment pinning — and a
-        # single-entry cache would thrash reloading two quantizers on
-        # every mixed-generation search
-        cache = getattr(self, "_quantizer_cache_map", None)
-        if cache is None:
-            cache = self._quantizer_cache_map = {}
-        hit = cache.get(quantizer_id)
+        # superseded quantizer.
+        hit = self._quantizer_cache_map.get(quantizer_id)
         if hit is not None:
             return hit
         spark = self.vindex.spark
-        if quantizer_dir is not None:
-            cent_path = f"{self.path}/{quantizer_dir}/centroids"
-            cb_path = f"{self.path}/{quantizer_dir}/codebooks"
-        else:
-            cent_path = f"{self.path}/quantizer_centroids"
-            cb_path = f"{self.path}/quantizer_codebooks"
-        cent = spark.read.parquet(cent_path).orderBy("cluster").collect()
+        base = f"{self.path}/{quantizer_dir}"
+        cent = spark.read.parquet(f"{base}/centroids").orderBy("cluster").collect()
         centroids = np.array([r["centroid"] for r in cent])
-        cb = spark.read.parquet(cb_path).orderBy("subspace", "code").collect()
+        cb = (
+            spark.read.parquet(f"{base}/codebooks")
+            .orderBy("subspace", "code")
+            .collect()
+        )
         m = 1 + max(r["subspace"] for r in cb)
         ksub = 1 + max(r["code"] for r in cb)
         dsub = len(cb[0]["centroid"])
         codebooks = np.empty((m, ksub, dsub))
         for r in cb:
             codebooks[r["subspace"], r["code"]] = r["centroid"]
-        cache[quantizer_id] = (centroids, codebooks)
-        while len(cache) > 4:  # bound: a handful of generations max
-            cache.pop(next(iter(cache)))
+        self._cache_quantizer(quantizer_id, (centroids, codebooks))
         return centroids, codebooks
 
-    def _seg_quantizer_map(self, meta: dict) -> dict[str, tuple]:
+    @staticmethod
+    def _seg_quantizer_map(meta: dict) -> dict[str, tuple]:
         """{segment: (quantizer_id, quantizer_dir)} for every live
         segment. Partial retrain (:meth:`retrain` with ``titles``)
         leaves older segments encoded under older quantizers — each
         segment's codes are only meaningful under the quantizer that
-        produced them, so serving routes per segment. Legacy metas (no
-        ``seg_quantizer``) map every segment to the meta's top-level
-        quantizer — exactly the old single-quantizer behavior."""
-        default = (meta.get("quantizer_id"), meta.get("quantizer_dir"))
-        sq = meta.get("seg_quantizer") or {}
-        return {
-            seg: tuple(sq.get(seg, default))
-            for seg in set(meta["assign"].values())
-        }
+        produced them, so serving routes per segment. Every meta pins
+        all of its live segments (build/refresh/retrain/compact write
+        the full map), so a missing pin is a KeyError, never a segment
+        silently dropped from serving."""
+        pins = meta["seg_quantizer"]
+        return {seg: tuple(pins[seg]) for seg in set(meta["assign"].values())}
 
     def _next_seg_quantizer(self, meta: dict, assign_new: dict) -> dict:
         """Carry the per-segment quantizer pins forward through a
@@ -855,7 +862,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
         head change (partial retrain) can never silently re-route an
         old segment's codes to a quantizer that didn't produce them."""
         prev = self._seg_quantizer_map(meta)
-        head = (meta.get("quantizer_id"), meta.get("quantizer_dir"))
+        head = (meta["quantizer_id"], meta["quantizer_dir"])
         live = set(assign_new.values())
         return {seg: list(prev.get(seg, head)) for seg in sorted(live)}
 
@@ -908,13 +915,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
                 seed=self.seed,
                 return_sample=True,
             )
-            quantizer_id = uuid.uuid4().hex[:12]
-            qdir = self._new_quantizer_dir(quantizer_id)
-            self._write_quantizer(centroids, codebooks, qdir)
-            cache = getattr(self, "_quantizer_cache_map", None)
-            if cache is None:
-                cache = self._quantizer_cache_map = {}
-            cache[quantizer_id] = (centroids, codebooks)
+            quantizer_id, qdir = self._write_quantizer(centroids, codebooks)
             seg = self._new_segment(version)
             self._encode_titles(None, centroids, codebooks, seg, reader=snap.read)
             # drift baseline: reconstruction error of a DRIFT_SAMPLE
@@ -931,8 +932,6 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
             baseline = self._recon_error(
                 self._baseline_slice(sample), centroids, codebooks
             )
-        m = self._load_meta()
-        next_meta = 1 if m is None else m["meta_version"] + 1
         meta = {
             "data_version": version,
             "base_parts": parts,
@@ -949,7 +948,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
                 "posts": self.posts,
             },
         }
-        self._publish_meta(next_meta, meta)
+        self._publish_meta(self._next_meta_version(), meta)
         if tune_to is not None:
             meta = dict(meta, tuned=self.tune(tune_to, k=tune_k))
         return meta
@@ -1017,9 +1016,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
             # 20M rehearsal measured the old full-corpus sample scan as
             # the dominant term (partial retrain 491 s vs full rebuild
             # 661 s — the encode term was already O(drifted)).
-            prev_q = self._load_quantizer(
-                m.get("quantizer_id"), m.get("quantizer_dir")
-            )
+            prev_q = self._load_quantizer(m["quantizer_id"], m["quantizer_dir"])
             rows = snap.read(titles=want)
             centroids, codebooks, sample = ivfpq_build(
                 rows,
@@ -1031,13 +1028,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
                 return_sample=True,
                 warm_start=prev_q,
             )
-            quantizer_id = uuid.uuid4().hex[:12]
-            qdir = self._new_quantizer_dir(quantizer_id)
-            self._write_quantizer(centroids, codebooks, qdir)
-            cache = getattr(self, "_quantizer_cache_map", None)
-            if cache is None:
-                cache = self._quantizer_cache_map = {}
-            cache[quantizer_id] = (centroids, codebooks)
+            quantizer_id, qdir = self._write_quantizer(centroids, codebooks)
             seg = self._new_segment(cur_version)
             self._encode_titles(
                 want, centroids, codebooks, seg, reader=snap.read
@@ -1199,16 +1190,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
         from .topk import knn_join
 
         meta = self._resolve(on_stale)
-        payload = self.vindex._load_manifest_version(meta["data_version"])
-        if payload is None:
-            raise StaleIndexError(
-                f"primary manifest v{meta['data_version']} has been "
-                f"vacuumed at {self.vindex.path}; refresh() or lease"
-            )
-        live = sorted(meta["assign"])
-        if titles is not None:
-            live = sorted(set(titles) & set(live))
-        emb = self.vindex._read_manifest_payload(payload, titles=live)
+        emb = self._pinned_rows(meta, titles)
 
         # deterministic hash-spread query sample (bounded collect)
         n = emb.select("id").count()
@@ -1259,7 +1241,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
                 for q, t in truth.items()
             ) / len(truth)
 
-        nlist = int(meta.get("params", {}).get("nlist", self.nlist))
+        nlist = int(meta["params"]["nlist"])
         nprobes: list[int] = []
         p = 1
         while p < nlist:
@@ -1297,7 +1279,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
             k=k,
             sample_queries=len(qrows),
             data_version=meta["data_version"],
-            quantizer_id=meta.get("quantizer_id"),
+            quantizer_id=meta["quantizer_id"],
             evaluated=trail,
         )
         if publish:
@@ -1323,7 +1305,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
             assign = dict(m["assign"])
             if changed:
                 centroids, codebooks = self._load_quantizer(
-                    m.get("quantizer_id"), m.get("quantizer_dir")
+                    m["quantizer_id"], m["quantizer_dir"]
                 )
                 seg = self._new_segment(cur_version)
                 self._encode_titles(
@@ -1335,7 +1317,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
                 # but a corpus that drifts away from the frozen
                 # codebooks wants a signal — compare the refreshed
                 # rows' reconstruction error against build()'s baseline
-                baseline = m.get("recon_baseline")
+                baseline = m["recon_baseline"]
                 if baseline is not None:
                     err = self._recon_error(
                         self._sample_vectors(snap.read, changed),
@@ -1351,10 +1333,10 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
             "base_parts": cur_parts,
             "assign": assign,
             "revoked": self._update_revoked(m, assign, changed + removed),
-            "quantizer_id": m.get("quantizer_id"),
-            "quantizer_dir": m.get("quantizer_dir"),
+            "quantizer_id": m["quantizer_id"],
+            "quantizer_dir": m["quantizer_dir"],
             "seg_quantizer": self._next_seg_quantizer(m, assign),
-            "recon_baseline": m.get("recon_baseline"),
+            "recon_baseline": m["recon_baseline"],
             "params": m["params"],
         }
         # sticky until the next build() retrains: a later in-distribution
@@ -1408,7 +1390,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
                     "refresh() before compact()"
                 )
             centroids, codebooks = self._load_quantizer(
-                m.get("quantizer_id"), m.get("quantizer_dir")
+                m["quantizer_id"], m["quantizer_dir"]
             )
             seg = self._new_segment(m["data_version"])
             self._encode_titles(live, centroids, codebooks, seg, reader=snap.read)
@@ -1420,14 +1402,32 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
             # this is the migration path that retires partial-retrain
             # generations (vacuum reclaims the old sidecars once no
             # retained meta references them)
-            seg_quantizer={
-                seg: [m.get("quantizer_id"), m.get("quantizer_dir")]
-            },
+            seg_quantizer={seg: [m["quantizer_id"], m["quantizer_dir"]]},
         )
         self._publish_meta(m["meta_version"] + 1, meta)
         return meta
 
     # -- serving ------------------------------------------------------------
+
+    def _pinned_rows(
+        self, meta: dict, titles: Sequence[str] | None
+    ) -> DataFrame:
+        """The primary's rows for (live ∩ requested) titles, read
+        through the manifest this meta indexed (``data_version``) — the
+        one snapshot the codes were built from. Raises
+        :class:`StaleIndexError` if that manifest has been vacuumed."""
+        payload = self.vindex._load_manifest_version(meta["data_version"])
+        if payload is None:
+            raise StaleIndexError(
+                f"primary manifest v{meta['data_version']} (the snapshot "
+                f"this {self.KIND} index serves) has been vacuumed at "
+                f"{self.vindex.path}; refresh() the index or hold a "
+                "primary reader_lease across serving"
+            )
+        live = sorted(meta["assign"])
+        if titles is not None:
+            live = sorted(set(titles) & set(live))
+        return self.vindex._read_manifest_payload(payload, titles=live)
 
     def encoded(self, *, on_stale: str = "error") -> DataFrame:
         return self._encoded_for(self._resolve(on_stale))
@@ -1458,7 +1458,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
                     continue
                 cond = F.col("title").isin(ts)
             else:
-                cond = self._serving_filter(seg_titles, revoked)
+                cond = self._serving_filter(revoked)
             if cond is not None:
                 df = df.filter(cond)
             frames.append(df.select("id", "cluster", "codes", "norm"))
@@ -1522,20 +1522,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
 
         meta = self._resolve(on_stale)
         groups = self._quantizer_groups(meta, titles)
-        emb = None
-        if rerank:
-            live = sorted(meta["assign"])
-            if titles is not None:
-                live = sorted(set(titles) & set(live))
-            payload = self.vindex._load_manifest_version(meta["data_version"])
-            if payload is None:
-                raise StaleIndexError(
-                    f"primary manifest v{meta['data_version']} (the snapshot "
-                    f"this {self.KIND} index serves) has been vacuumed at "
-                    f"{self.vindex.path}; refresh() the index or hold a "
-                    "primary reader_lease across serving"
-                )
-            emb = self.vindex._read_manifest_payload(payload, titles=live)
+        emb = self._pinned_rows(meta, titles) if rerank else None
         if len(groups) == 1:
             centroids, codebooks, enc = groups[0]
             return ivfpq_topk(
@@ -1602,20 +1589,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
 
         meta = self._resolve(on_stale)
         groups = self._quantizer_groups(meta, titles)
-        emb = None
-        if rerank:
-            live = sorted(meta["assign"])
-            if titles is not None:
-                live = sorted(set(titles) & set(live))
-            payload = self.vindex._load_manifest_version(meta["data_version"])
-            if payload is None:
-                raise StaleIndexError(
-                    f"primary manifest v{meta['data_version']} (the snapshot "
-                    f"this {self.KIND} index serves) has been vacuumed at "
-                    f"{self.vindex.path}; refresh() the index or hold a "
-                    "primary reader_lease across serving"
-                )
-            emb = self.vindex._read_manifest_payload(payload, titles=live)
+        emb = self._pinned_rows(meta, titles) if rerank else None
         if len(groups) == 1:
             centroids, codebooks, enc = groups[0]
             return ivfpq_topk_batch(
@@ -1684,11 +1658,9 @@ class SyncedTextIndex(_SyncedIndexBase):
     Layout::
 
         {path}/_meta/v*.json
-        {path}/seg-v*-<nonce>/postings/bucket=<b>/   # (word, id, tf, dl, title)
-        {path}/seg-v*-<nonce>/postings/bucket=-1/    # per-doc sentinel rows
-                                                     # (word NULL, id, dl, title)
-        {path}/seg-v*-<nonce>/doclens/               # pre-round-10 sidecar
-                                                     # (id, dl, title)
+        {path}/seg-v*-t<ms>-<nonce>/postings/bucket=<b>/   # (word, id, tf, dl, title)
+        {path}/seg-v*-t<ms>-<nonce>/postings/bucket=-1/    # one row per doc
+                                                          # (word NULL, id, dl, title)
 
     Corpus statistics (per-title doc counts and token sums) live IN the
     meta: N and avgdl for the live title set are exact driver-side
@@ -1699,24 +1671,18 @@ class SyncedTextIndex(_SyncedIndexBase):
 
     KIND = "text"
 
-    #: what `_write_segment` writes (partition column included).
-    #: Since round 9 postings embed the document length (``dl`` —
-    #: functionally dependent on ``id``, +8 bytes per posting): the
-    #: BM25 length norm then comes straight off the postings row and
-    #: the serving path needs NO doclens scan or join at all — one
-    #: bucket-pruned scan per query instead of scan+scan+shuffle-join.
-    #: The doclens sidecar is still written: it is the per-doc row set
-    #: fsck deep-parity and the publish-time corpus stats read (and the
-    #: only place zero-token docs appear).
+    #: what `_write_segment` writes (partition column included). Every
+    #: posting carries its document's length (``dl`` — functionally
+    #: dependent on ``id``, +8 bytes per posting), so the BM25 length
+    #: norm comes straight off the postings row: one bucket-pruned scan
+    #: per query, no doc-length scan or join. The ``bucket=-1``
+    #: partition holds one row per doc (``word``/``tf`` NULL): the
+    #: per-doc set the publish-time corpus stats and deep fsck read, and
+    #: the only place zero-token docs appear.
     POSTINGS_SCHEMA = (
         "word string, id string, title string, tf double, dl double, "
         "bucket int"
     )
-    #: pre-round-9 segments (meta lacks ``postings_dl``) — no dl column
-    POSTINGS_SCHEMA_LEGACY = (
-        "word string, id string, title string, tf double, bucket int"
-    )
-    DOCLENS_SCHEMA = "id string, title string, dl double"
 
     def __init__(self, vindex: VectorIndex, path: str, *, buckets: int = 64):
         super().__init__(vindex, path)
@@ -1737,25 +1703,11 @@ class SyncedTextIndex(_SyncedIndexBase):
         ]
 
     def _write_segment(
-        self,
-        titles: Sequence[str] | None,
-        segment: str,
-        reader=None,
-        *,
-        include_dl: bool = True,
-        sentinel: bool | None = None,
+        self, titles: Sequence[str] | None, segment: str, reader=None
     ) -> dict:
-        """Encode ``titles`` (None = all live) into ``segment``;
-        returns {title: [n_docs, n_dl, sum_dl]} for the meta.
-        ``include_dl`` embeds the doc length in each posting (the
-        round-9 layout); ``sentinel`` folds the per-doc length rows
-        into the postings write as a ``bucket=-1`` partition (the
-        round-10 layout — ONE write action and ONE tokenize pass per
-        segment instead of two of each; default: follow
-        ``include_dl``). Refresh of an older index passes the meta's
-        flags so every segment of one index shares one layout."""
-        if sentinel is None:
-            sentinel = include_dl
+        """Encode ``titles`` (None = all live) into ``segment`` with ONE
+        tokenize pass and ONE write action; returns {title: [n_docs,
+        n_dl, sum_dl]} for the meta."""
         read = reader if reader is not None else self.vindex.read
         rows = read(
             titles=None if titles is None else list(titles)
@@ -1770,88 +1722,41 @@ class SyncedTextIndex(_SyncedIndexBase):
             .cast("double")
             .alias("dl")
         )
-        if sentinel:
-            if not include_dl:
-                raise ValueError(
-                    "sentinel doclens layout requires dl-embedded postings"
+        # a NULL element prepended to each doc's token array rides the
+        # same explode/groupBy/shuffle/write as the postings and lands
+        # in the bucket=-1 partition as that doc's (id, title, dl) row.
+        # tokens_expr filters empties and split never yields NULL, so
+        # the sentinel cannot collide with a real word. The coalesce
+        # keeps NULL-text docs (ws NULL): concat of NULL would explode
+        # to zero rows and silently drop them from the doc-length set.
+        exploded = toks.select(
+            "id",
+            "title",
+            dl,
+            F.explode(
+                F.concat(
+                    F.array(F.lit(None).cast("string")),
+                    F.coalesce(F.col("ws"), F.array().cast("array<string>")),
                 )
-            # one fused action: a NULL element prepended to each doc's
-            # token array rides the same explode/groupBy/shuffle/write
-            # as the postings and lands in the bucket=-1 partition —
-            # the per-doc (id, title, dl) rows the two-write layout
-            # kept in a separate doclens/ sidecar (second tokenize
-            # pass + second commit, both pure fixed cost per segment).
-            # Postings rows are bit-identical to the two-write layout:
-            # tokens_expr filters empties and split never yields NULL,
-            # so the sentinel cannot collide with a real word. The
-            # coalesce keeps NULL-text docs (ws NULL): concat of NULL
-            # would explode to zero rows and silently drop them from
-            # the doc-length set.
-            exploded = toks.select(
+            ).alias("word"),
+        )
+        postings = (
+            exploded.groupBy("word", "id", "title", "dl")
+            .agg(F.count(F.lit(1)).cast("double").alias("tf"))
+            .select(
+                "word",
                 "id",
                 "title",
-                dl,
-                F.explode(
-                    F.concat(
-                        F.array(F.lit(None).cast("string")),
-                        F.coalesce(
-                            F.col("ws"), F.array().cast("array<string>")
-                        ),
-                    )
-                ).alias("word"),
-            )
-            postings = (
-                exploded.groupBy("word", "id", "title", "dl")
-                .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-                .select(
-                    "word",
-                    "id",
-                    "title",
-                    F.when(F.col("word").isNotNull(), F.col("tf")).alias(
-                        "tf"
-                    ),
-                    "dl",
-                    F.when(
-                        F.col("word").isNotNull(),
-                        _term_bucket(F.col("word"), self.buckets),
-                    )
-                    .otherwise(F.lit(-1))
-                    .alias("bucket"),
+                F.when(F.col("word").isNotNull(), F.col("tf")).alias("tf"),
+                "dl",
+                F.when(
+                    F.col("word").isNotNull(),
+                    _term_bucket(F.col("word"), self.buckets),
                 )
+                .otherwise(F.lit(-1))
+                .alias("bucket"),
             )
-        elif include_dl:
-            # dl rides the posting row (exploded rows always have a
-            # non-null, non-empty ws, so size(ws) is the same double
-            # the doclens sidecar records for that id); it joins the
-            # group-by KEY — functionally dependent on id, so the
-            # (word, id, title) cardinality is unchanged
-            postings = (
-                toks.select(
-                    "id",
-                    "title",
-                    F.size("ws").cast("double").alias("dl"),
-                    F.explode("ws").alias("word"),
-                )
-                .groupBy("word", "id", "title", "dl")
-                .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-                .withColumn(
-                    "bucket", _term_bucket(F.col("word"), self.buckets)
-                )
-            )
-        else:
-            postings = (
-                toks.select("id", "title", F.explode("ws").alias("word"))
-                .groupBy("word", "id", "title")
-                .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-                .withColumn(
-                    "bucket", _term_bucket(F.col("word"), self.buckets)
-                )
-            )
-        if not sentinel:
-            doclens = toks.select("id", "title", dl)
-            doclens.write.mode("overwrite").parquet(
-                f"{self.path}/{segment}/doclens"
-            )
+        )
         (
             # sortWithinPartitions(word): inside each bucket file the
             # postings are word-clustered, so every parquet row group
@@ -1867,20 +1772,13 @@ class SyncedTextIndex(_SyncedIndexBase):
             .partitionBy("bucket")
             .parquet(f"{self.path}/{segment}/postings")
         )
-        if sentinel:
-            stats_src = (
-                # explicit schema: this module just wrote the file;
-                # footer inference would cost one extra driver job
-                self.vindex.spark.read.schema(self.POSTINGS_SCHEMA)
-                .parquet(f"{self.path}/{segment}/postings")
-                .where(F.col("bucket") == -1)
-            )
-        else:
-            stats_src = self.vindex.spark.read.schema(
-                self.DOCLENS_SCHEMA
-            ).parquet(f"{self.path}/{segment}/doclens")
         stats = (
-            stats_src.groupBy("title")
+            # explicit schema: this module just wrote the file; footer
+            # inference would cost one extra driver job
+            self.vindex.spark.read.schema(self.POSTINGS_SCHEMA)
+            .parquet(f"{self.path}/{segment}/postings")
+            .where(F.col("bucket") == -1)
+            .groupBy("title")
             .agg(
                 F.count(F.lit(1)).alias("n_docs"),
                 F.count("dl").alias("n_dl"),
@@ -1895,32 +1793,20 @@ class SyncedTextIndex(_SyncedIndexBase):
 
     def _doclens_frames(self, meta: dict) -> list:
         """[(per-doc (id, title, dl) frame, assigned titles, revoked)]
-        for every live segment, layout-agnostic: sentinel segments
-        (round 10) serve the ``bucket=-1`` partition of ``postings/``,
-        older segments the ``doclens/`` sidecar. Shared by deep fsck,
-        the chaos/consistency suites and any stats re-derivation."""
-        if meta.get("doclens_sentinel"):
-            return [
-                (
-                    df.where(F.col("bucket") == -1).select(
-                        "id", "title", "dl"
-                    ),
-                    ts,
-                    rv,
-                )
-                for df, ts, rv in self._segment_frames(
-                    meta, "postings", schema=self.POSTINGS_SCHEMA
-                )
-            ]
-        return self._segment_frames(
-            meta, "doclens", schema=self.DOCLENS_SCHEMA
-        )
+        for every live segment — the ``bucket=-1`` partition of
+        ``postings/``. Shared by deep fsck, the chaos/consistency suites
+        and any stats re-derivation."""
+        return [
+            (df.where(F.col("bucket") == -1).select("id", "title", "dl"), ts, rv)
+            for df, ts, rv in self._segment_frames(
+                meta, "postings", schema=self.POSTINGS_SCHEMA
+            )
+        ]
 
     def build(self) -> dict:
         with self._pinned_source() as (version, parts, snap):
             seg = self._new_segment(version)
             title_stats = self._write_segment(None, seg, reader=snap.read)
-        m = self._load_meta()
         meta = {
             "data_version": version,
             "base_parts": parts,
@@ -1930,16 +1816,8 @@ class SyncedTextIndex(_SyncedIndexBase):
             "stats_totals": self._stats_totals(title_stats),
             "buckets": self.buckets,
             "tokenizer": TOKENIZER_VERSION,
-            # round-9 layout: dl embedded per posting (doclens-join-free
-            # serving). All-or-nothing per index: refresh/compact
-            # propagate the flag so segments never mix layouts.
-            "postings_dl": True,
-            # round-10 layout: per-doc length rows live in the
-            # postings' bucket=-1 sentinel partition (one write action
-            # per segment). Same all-or-nothing propagation.
-            "doclens_sentinel": True,
         }
-        self._publish_meta(1 if m is None else m["meta_version"] + 1, meta)
+        self._publish_meta(self._next_meta_version(), meta)
         return meta
 
     def refresh(self) -> dict:
@@ -1955,13 +1833,7 @@ class SyncedTextIndex(_SyncedIndexBase):
             if changed:
                 seg = self._new_segment(cur_version)
                 title_stats.update(
-                    self._write_segment(
-                        changed,
-                        seg,
-                        reader=snap.read,
-                        include_dl=bool(m.get("postings_dl")),
-                        sentinel=bool(m.get("doclens_sentinel")),
-                    )
+                    self._write_segment(changed, seg, reader=snap.read)
                 )
                 for t in changed:
                     assign[t] = seg
@@ -1977,8 +1849,6 @@ class SyncedTextIndex(_SyncedIndexBase):
             "stats_totals": self._stats_totals(title_stats),
             "buckets": m["buckets"],
             "tokenizer": m["tokenizer"],
-            "postings_dl": bool(m.get("postings_dl")),
-            "doclens_sentinel": bool(m.get("doclens_sentinel")),
         }
         self._publish_meta(m["meta_version"] + 1, meta)
         return meta
@@ -2000,9 +1870,6 @@ class SyncedTextIndex(_SyncedIndexBase):
                     "refresh() before compact()"
                 )
             seg = self._new_segment(m["data_version"])
-            # compact rewrites EVERY live segment, so it is the safe
-            # point to migrate an older index to the dl-embedded,
-            # sentinel-doclens postings layout
             title_stats = self._write_segment(live, seg, reader=snap.read)
         meta = dict(
             m,
@@ -2010,8 +1877,6 @@ class SyncedTextIndex(_SyncedIndexBase):
             revoked={seg: []},
             title_stats=title_stats,
             stats_totals=self._stats_totals(title_stats),
-            postings_dl=True,
-            doclens_sentinel=True,
         )
         self._publish_meta(m["meta_version"] + 1, meta)
         return meta
@@ -2122,7 +1987,7 @@ class SyncedTextIndex(_SyncedIndexBase):
         self, meta: dict, terms: list[str], titles: Sequence[str] | None
     ):
         """Shared scoped scan for the single-query and batch scorers:
-        returns ``(hits, doclens, n_docs, avgdl)`` or None (empty
+        returns ``(hits, n_docs, avgdl)`` or None (empty
         scope). Buckets are hashed client-side (parity-pinned
         xxhash64), segments read with explicit schemas and O(churn)
         title filters — construction launches no Spark job."""
@@ -2138,10 +2003,8 @@ class SyncedTextIndex(_SyncedIndexBase):
         want = None if titles is None else set(titles)
         if want is None:
             # publish-time totals: O(1) per query instead of an
-            # O(titles) driver sum (legacy metas fall back to the sum)
-            n_docs, n_dl, sum_dl = meta.get("stats_totals") or self._stats_totals(
-                meta["title_stats"]
-            )
+            # O(titles) driver sum
+            n_docs, n_dl, sum_dl = meta["stats_totals"]
         else:
             stats = {t: v for t, v in meta["title_stats"].items() if t in want}
             n_docs = sum(v[0] for v in stats.values())
@@ -2158,23 +2021,13 @@ class SyncedTextIndex(_SyncedIndexBase):
                 if not ts:
                     return False
                 return F.col("title").isin(ts)
-            return self._serving_filter(seg_titles, revoked)
+            return self._serving_filter(revoked)
 
-        # round-9 layout (dl embedded in postings): one bucket-pruned
-        # postings scan per query, no doclens scan and no per-query
-        # shuffle join. Legacy segments (no dl column) keep the join.
-        embedded_dl = bool(meta.get("postings_dl"))
-        post_schema = (
-            self.POSTINGS_SCHEMA if embedded_dl else self.POSTINGS_SCHEMA_LEGACY
-        )
-        hit_cols = ["word", "id", "tf", "dl"] if embedded_dl else [
-            "word",
-            "id",
-            "tf",
-        ]
-        hit_frames, dl_frames = [], []
+        # dl rides the posting row: one bucket-pruned postings scan per
+        # query, no doc-length scan and no per-query shuffle join
+        hit_frames = []
         for df, seg_titles, revoked in self._segment_frames(
-            meta, "postings", schema=post_schema
+            meta, "postings", schema=self.POSTINGS_SCHEMA
         ):
             cond = _title_cond(seg_titles, revoked)
             if cond is False:
@@ -2184,36 +2037,20 @@ class SyncedTextIndex(_SyncedIndexBase):
             ).isin(terms)
             if cond is not None:
                 pred = pred & cond
-            hit_frames.append(df.where(pred).select(*hit_cols))
-        if not embedded_dl:
-            for df, seg_titles, revoked in self._doclens_frames(meta):
-                cond = _title_cond(seg_titles, revoked)
-                if cond is False:
-                    continue
-                if cond is not None:
-                    df = df.where(cond)
-                dl_frames.append(df.select("id", "dl"))
+            hit_frames.append(df.where(pred).select("word", "id", "tf", "dl"))
         if not hit_frames:
             return None
-        hits = reduce(DataFrame.unionByName, hit_frames)
-        doclens = (
-            None if embedded_dl else reduce(DataFrame.unionByName, dl_frames)
-        )
-        return hits, doclens, n_docs, avgdl
+        return reduce(DataFrame.unionByName, hit_frames), n_docs, avgdl
 
     @staticmethod
     def _bm25_contrib(scan, k1: float, b: float):
         """(scored frame carrying word/id/tf/df/dl, per-row Okapi
-        contribution column) from a :meth:`_bm25_scan` result.
-        ``doclens is None`` means dl rides the postings row (round-9
-        layout) and no length-norm join is needed."""
-        hits, doclens, n_docs, avgdl = scan
+        contribution column) from a :meth:`_bm25_scan` result."""
+        hits, n_docs, avgdl = scan
         dfs = hits.groupBy("word").agg(
             F.count(F.lit(1)).cast("double").alias("df")
         )
         scored = hits.join(F.broadcast(dfs), "word")
-        if doclens is not None:
-            scored = scored.join(doclens, "id")
         idf = F.log(
             1 + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
         )

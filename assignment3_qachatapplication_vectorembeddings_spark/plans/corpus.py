@@ -3594,7 +3594,7 @@ def q_text_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the time is ~10 sequential commit/build Spark actions (two
     manifest commits, two segment builds, stats), each
     job-floor-bound (the streaming-drain cost character). At sf10+
-    the postings/doclens WRITES dominate instead, as index
+    the postings WRITES dominate instead, as index
     construction should — note the oracle only runs the query side,
     so this row's ratio compares build+refresh+query against
     query-only by design; the serve-only plan is the pruned-postings
@@ -5913,8 +5913,8 @@ FROM rounded ORDER BY doc_id
 # and Dolma): word-count bounds, mean-word-length bounds, type-token
 # ratio, and repeated-bigram coverage. Everything except the top-bigram
 # count is per-ROW array math (zero shuffles, whole-stage codegen); the
-# bigram mode is a per-row fold over the sorted bigram array (no
-# explode, no join). Per-doc ratios are rounded then summed as exact
+# bigram mode is an Arrow-batched pandas UDF counting adjacent token
+# pairs (no explode, no join). Per-doc ratios are rounded then summed as exact
 # decimals so per-source averages are order-independent (same idiom as
 # BM25/unigram_logprob).
 # --------------------------------------------------------------------------

@@ -169,15 +169,15 @@ def _run_chaos(spark, tmp_path, scheme="", conditional_put=None):
         (r["id"], r["title"]) for r in vi.read().select("id", "title").collect()
     }
     served = set()
-    for df, ts, rv in ann._segment_frames(meta, schema=ann.SEGMENT_SCHEMA):
-        cond = ann._serving_filter(ts, rv)
+    for df, _ts, rv in ann._segment_frames(meta, schema=ann.SEGMENT_SCHEMA):
+        cond = ann._serving_filter(rv)
         sdf = df.filter(cond) if cond is not None else df
         served |= {(r["id"], r["title"]) for r in sdf.select("id", "title").collect()}
     assert served == primary
     # lexical final consistency: per-doc length rows == primary rows
     tserved = set()
-    for df, ts, rv in tix._doclens_frames(tmeta):
-        cond = tix._serving_filter(ts, rv)
+    for df, _ts, rv in tix._doclens_frames(tmeta):
+        cond = tix._serving_filter(rv)
         sdf = df.filter(cond) if cond is not None else df
         tserved |= {
             (r["id"], r["title"]) for r in sdf.select("id", "title").collect()

@@ -19,6 +19,7 @@ from assignment3_qachatapplication_vectorembeddings_spark.operators.index_mainte
     VectorIndex,
 )
 from assignment3_qachatapplication_vectorembeddings_spark.operators.index_sync import (
+    FORMAT_VERSION,
     StaleIndexError,
     SyncedIvfpqIndex,
     SyncedTextIndex,
@@ -616,10 +617,10 @@ def test_retrain_clears_drift_and_serving_stays_available(
         c_old, b_old = fresh._load_quantizer(old_qid, old_qdir)
         assert c_old.shape[0] == 8
         total = 0
-        for df, ts, rv in ann._segment_frames(
+        for df, _ts, rv in ann._segment_frames(
             pinned, schema=ann.SEGMENT_SCHEMA
         ):
-            cond = ann._serving_filter(ts, rv)
+            cond = ann._serving_filter(rv)
             total += (df.filter(cond) if cond is not None else df).count()
         assert total == 30  # 4 patterns x 6 + 6 drift rows
 
@@ -661,35 +662,6 @@ def test_retrain_clears_drift_and_serving_stays_available(
     assert old_qdir in removed
     listing = exact_vindex._list_dir(ann.path)
     assert retrained["quantizer_dir"] in listing
-
-
-def test_load_quantizer_legacy_fixed_paths(exact_vindex, tmp_path, spark):
-    """Back-compat: a pre-round-7 index stored its quantizer at the
-    fixed ``quantizer_centroids``/``quantizer_codebooks`` paths and its
-    meta has no ``quantizer_dir`` — _load_quantizer(None dir) must read
-    the legacy layout."""
-    import numpy as np
-
-    ann = SyncedIvfpqIndex(
-        exact_vindex, str(tmp_path / "legacy_ann"), nlist=4, m=4, nbits=4
-    )
-    meta = ann.build()
-    qdir = meta["quantizer_dir"]
-    spark.read.parquet(f"{ann.path}/{qdir}/centroids").write.parquet(
-        f"{ann.path}/quantizer_centroids"
-    )
-    spark.read.parquet(f"{ann.path}/{qdir}/codebooks").write.parquet(
-        f"{ann.path}/quantizer_codebooks"
-    )
-    fresh = SyncedIvfpqIndex(
-        exact_vindex, ann.path, nlist=4, m=4, nbits=4
-    )
-    c_new, b_new = fresh._load_quantizer(meta["quantizer_id"], qdir)
-    legacy = SyncedIvfpqIndex(
-        exact_vindex, ann.path, nlist=4, m=4, nbits=4
-    )
-    c_leg, b_leg = legacy._load_quantizer("some-legacy-id", None)
-    assert np.allclose(c_new, c_leg) and np.allclose(b_new, b_leg)
 
 
 def test_vacuum_spares_young_and_unparseable_quantizer_dirs(
@@ -1245,7 +1217,7 @@ def test_bm25_serving_reads_postings_only(tix):
     test name must not contain the substring 'doclens' — pytest's
     tmp_path embeds the test name, and the scan Location would then
     trip the plan assertion.)"""
-    assert tix._load_meta().get("postings_dl") is True
+    assert tix._load_meta()["format_version"] == FORMAT_VERSION
     import io as _io
 
     df = tix.bm25(["spark", "join"])
@@ -1274,14 +1246,14 @@ def test_sentinel_doclens_layout_build_and_refresh(tix, vindex, spark):
     import os
 
     m = tix._load_meta()
-    assert m.get("doclens_sentinel") is True
+    assert m["format_version"] == FORMAT_VERSION
     base = os.path.dirname(tix.meta_dir)
     for seg in set(m["assign"].values()):
         assert not os.path.exists(f"{base}/{seg}/doclens")
         assert os.path.exists(f"{base}/{seg}/postings/bucket=-1")
     rows = []
-    for df, ts, rv in tix._doclens_frames(m):
-        cond = tix._serving_filter(ts, rv)
+    for df, _ts, rv in tix._doclens_frames(m):
+        cond = tix._serving_filter(rv)
         sdf = df.filter(cond) if cond is not None else df
         rows.extend(sdf.collect())
     assert {(r["id"], r["title"]) for r in rows} == {
@@ -1297,7 +1269,7 @@ def test_sentinel_doclens_layout_build_and_refresh(tix, vindex, spark):
     )
     tix.refresh()
     m2 = tix._load_meta()
-    assert m2.get("doclens_sentinel") is True
+    assert m2["format_version"] == FORMAT_VERSION
     new_seg = m2["assign"]["formA"]
     assert not os.path.exists(f"{base}/{new_seg}/doclens")
     assert os.path.exists(f"{base}/{new_seg}/postings/bucket=-1")
@@ -1316,8 +1288,8 @@ def test_sentinel_layout_null_text_doc_keeps_doclens_row(vindex, spark, tmp_path
     idx.build()
     m = idx._load_meta()
     got = {}
-    for df, ts, rv in idx._doclens_frames(m):
-        cond = idx._serving_filter(ts, rv)
+    for df, _ts, rv in idx._doclens_frames(m):
+        cond = idx._serving_filter(rv)
         sdf = df.filter(cond) if cond is not None else df
         got.update({r["id"]: r["dl"] for r in sdf.collect()})
     assert got["nulldoc_0"] is None
@@ -1326,99 +1298,67 @@ def test_sentinel_layout_null_text_doc_keeps_doclens_row(vindex, spark, tmp_path
     assert m["title_stats"]["formNull"] == [1, 0, 0.0]
 
 
-def test_round9_two_dir_layout_refresh_stays_two_dir(tix, vindex, spark, tmp_path):
-    """An index whose meta says dl-embedded postings but NO sentinel
-    (a round-9 build) refreshes in its own layout — new segments keep
-    writing the doclens/ sidecar — and serves identically."""
-    import os
+# -- on-disk format version ------------------------------------------------
 
-    r9 = SyncedTextIndex(vindex, str(tmp_path / "tix_r9"), buckets=8)
-    with r9._pinned_source() as (version, parts, snap):
-        seg = r9._new_segment(version)
-        stats = r9._write_segment(
-            None, seg, reader=snap.read, include_dl=True, sentinel=False
-        )
-    from assignment3_qachatapplication_vectorembeddings_spark.operators.index_sync import (
-        TOKENIZER_VERSION,
+
+def _publish_foreign_meta(idx, format_version):
+    """Publish a copy of the newest meta as the next version with
+    another (``None``: no) ``format_version`` — what an index written
+    by a different engine version looks like to this one."""
+    import json
+
+    versions = idx._meta_versions()
+    raw = idx.vindex._read_small_file(
+        f"{idx.meta_dir}/{idx._meta_name(versions[-1])}"
+    )
+    payload = json.loads(raw)
+    payload.pop("format_version")
+    if format_version is not None:
+        payload["format_version"] = format_version
+    nxt = versions[-1] + 1
+    assert idx.vindex._create_exclusive(
+        f"{idx.meta_dir}/{idx._meta_name(nxt)}", json.dumps(payload).encode()
+    )
+    return nxt
+
+
+@pytest.mark.parametrize("found", [None, FORMAT_VERSION + 1])
+def test_foreign_format_version_refused_then_rebuilt(vindex, tmp_path, found):
+    """Every published meta carries the engine's format_version; a meta
+    with a missing or unknown one is refused loudly by serving and by
+    refresh, reported as an error by fsck, and build() rebuilds in
+    place over it."""
+    from assignment3_qachatapplication_vectorembeddings_spark.operators.index_fsck import (
+        fsck_derived,
     )
 
-    r9._publish_meta(
-        1,
-        {
-            "data_version": version,
-            "base_parts": parts,
-            "assign": {t: seg for t in parts},
-            "revoked": {seg: []},
-            "title_stats": stats,
-            "stats_totals": r9._stats_totals(stats),
-            "buckets": r9.buckets,
-            "tokenizer": TOKENIZER_VERSION,
-            "postings_dl": True,
-        },
-    )
-    terms = ["spark", "join", "about"]
-    assert _scores(r9.bm25(terms)) == _scores(tix.bm25(terms))
-    vindex.upsert(
-        make_updates(spark, [("formA_99", "formA", "spark about joins")])
-    )
-    r9.refresh()
-    tix.refresh()
-    m = r9._load_meta()
-    assert m.get("doclens_sentinel") is False
-    new_seg = m["assign"]["formA"]
-    base = os.path.dirname(r9.meta_dir)
-    assert os.path.exists(f"{base}/{new_seg}/doclens")
-    assert _scores(r9.bm25(terms)) == _scores(tix.bm25(terms))
-    # compact migrates to the fused sentinel layout
-    r9.compact()
-    assert r9._load_meta().get("doclens_sentinel") is True
-    assert _scores(r9.bm25(terms)) == _scores(tix.bm25(terms))
-
-
-def test_legacy_postings_layout_still_serves_and_stays_legacy(
-    tix, vindex, spark, tmp_path
-):
-    """A pre-round-9 index (no dl column, no postings_dl flag) keeps
-    the doclens-join path and scores identically; refresh writes new
-    segments in the LEGACY layout so one index never mixes layouts;
-    compact migrates it to the new layout."""
-    legacy = SyncedTextIndex(vindex, str(tmp_path / "tix_legacy"), buckets=8)
-    with legacy._pinned_source() as (version, parts, snap):
-        seg = legacy._new_segment(version)
-        stats = legacy._write_segment(
-            None, seg, reader=snap.read, include_dl=False
-        )
-    legacy._publish_meta(
-        1,
-        {
-            "data_version": version,
-            "base_parts": parts,
-            "assign": {t: seg for t in parts},
-            "revoked": {seg: []},
-            "title_stats": stats,
-            "stats_totals": legacy._stats_totals(stats),
-            "buckets": legacy.buckets,
-            "tokenizer": legacy._load_meta()["tokenizer"]
-            if legacy._load_meta()
-            else __import__(
-                "assignment3_qachatapplication_vectorembeddings_spark.operators.index_sync",
-                fromlist=["TOKENIZER_VERSION"],
-            ).TOKENIZER_VERSION,
-        },
-    )
-    terms = ["spark", "join", "about"]
-    assert _scores(legacy.bm25(terms)) == _scores(tix.bm25(terms))
-
-    # churn one title; refresh must stay legacy and still match
-    vindex.upsert(
-        make_updates(spark, [("formA_99", "formA", "spark about joins")])
-    )
-    legacy.refresh()
-    tix.refresh()
-    assert legacy._load_meta().get("postings_dl") is False
-    assert _scores(legacy.bm25(terms)) == _scores(tix.bm25(terms))
-
-    # compact migrates to the dl-embedded layout
-    legacy.compact()
-    assert legacy._load_meta().get("postings_dl") is True
-    assert _scores(legacy.bm25(terms)) == _scores(tix.bm25(terms))
+    ann = SyncedIvfpqIndex(vindex, str(tmp_path / "fv_ann"), nlist=4, m=4, nbits=4)
+    tix = SyncedTextIndex(vindex, str(tmp_path / "fv_tix"), buckets=8)
+    q = EMB.embed_one("spark windows")
+    serve = {
+        ann: lambda: ann.search(q, 3, nprobe=4).collect(),
+        tix: lambda: tix.bm25(["spark", "join"]).collect(),
+    }
+    for idx, query in serve.items():
+        idx.build()
+        assert idx._load_meta()["format_version"] == FORMAT_VERSION
+        foreign = _publish_foreign_meta(idx, found)
+        for call in (query, idx.refresh):
+            with pytest.raises(ValueError, match="format_version") as err:
+                call()
+            assert idx.meta_dir in str(err.value)
+            assert repr(found) in str(err.value)
+            assert f"supports {FORMAT_VERSION}" in str(err.value)
+        rep = fsck_derived(idx)
+        assert any(
+            f"v{foreign} has format_version" in e for e in rep["errors"]
+        ), rep
+        # rebuild in place: numbered past the refused meta, serves again
+        idx.build()
+        m = idx._load_meta()
+        assert m["meta_version"] == foreign + 1
+        assert m["format_version"] == FORMAT_VERSION
+        assert len(query()) > 0
+        rep = fsck_derived(idx)
+        assert rep["errors"] == [], rep
+        assert any("superseded" in w for w in rep["warnings"])
