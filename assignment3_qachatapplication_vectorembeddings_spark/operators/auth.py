@@ -11,7 +11,10 @@ Tables are append-mostly parquet; point lookups are broadcast-friendly
 filters. Auto-increment PKs (MySQL AUTO_INCREMENT) become max+1 driver
 reads — these tables are catalog-scale (users, sessions), not the
 100 TB path, so a driver-side max is the right cost model; the data
-path never touches them except via broadcast joins.
+path never touches them except via broadcast joins. Inserts are one
+driver-built row each, shipped through :func:`~..runtime.local_frame`
+(Arrow, one partition → one parquet file per insert); timestamps are
+tz-aware UTC, so the stored instant never depends on the host's zone.
 """
 
 from __future__ import annotations
@@ -29,6 +32,7 @@ from ..functions.crypto import (
     verify_password,
     verify_token,
 )
+from ..runtime import local_frame
 from ..schemas import CHAT_SCHEMA, REFERENCE_SCHEMA, USER_SCHEMA
 
 __all__ = ["AuthStore"]
@@ -61,9 +65,15 @@ class AuthStore:
         these catalog-scale tables. NOT safe under concurrent writers
         (two writers can read the same max); a multi-writer deployment
         should replace it with an external sequence or UUID keys. The
-        100 TB data path never allocates ids this way."""
-        row = df.agg(F.max(col).alias("m")).head()
-        return int(row["m"] or 0) + 1
+        100 TB data path never allocates ids this way. A top-1 sort
+        (one TakeOrderedAndProject job) rather than ``agg(max)``, whose
+        partial/final aggregate pays a second job and an exchange."""
+        row = df.select(col).orderBy(F.desc(col)).limit(1).head()
+        top = None if row is None else row[col]
+        return int(top or 0) + 1
+
+    def _insert(self, path: str, row: tuple, schema) -> None:
+        local_frame(self.spark, [row], schema).write.mode("append").parquet(path)
 
     # -- P2: point lookup by email (crud.py:11-12) ---------------------------
 
@@ -85,12 +95,12 @@ class AuthStore:
             raise ValueError("Email already registered")  # main.py:36-38
         salt, pw_hash = hash_password(password)
         user_id = self._next_id(self.users(), "user_id")
-        now = dt.datetime.utcnow()
-        row = self.spark.createDataFrame(
-            [(user_id, email, bytearray(salt), pw_hash, now, now, None, True)],
+        now = dt.datetime.now(dt.timezone.utc)
+        self._insert(
+            self.users_path,
+            (user_id, email, bytes(salt), pw_hash, now, now, None, True),
             USER_SCHEMA,
         )
-        row.write.mode("append").parquet(self.users_path)
         return user_id
 
     # -- /login: P2 + F15 verify + F16 token (main.py:43-51) -----------------
@@ -112,11 +122,11 @@ class AuthStore:
 
     def add_chat(self, user_id: int, question: str, answer: str) -> int:
         chat_id = self._next_id(self.chats(), "chat_id")
-        row = self.spark.createDataFrame(
-            [(chat_id, user_id, question, answer, dt.datetime.utcnow())],
+        self._insert(
+            self.chats_path,
+            (chat_id, user_id, question, answer, dt.datetime.now(dt.timezone.utc)),
             CHAT_SCHEMA,
         )
-        row.write.mode("append").parquet(self.chats_path)
         return chat_id
 
     # -- references: the table behind /showReference (models.py:35-40) -------
@@ -129,10 +139,11 @@ class AuthStore:
         processed document here (the reference populates Reference as
         forms land, main.py:78-85 reads it back)."""
         ref_id = self._next_id(self.references(), "id")
-        row = self.spark.createDataFrame(
-            [(ref_id, form_title, dt.datetime.utcnow())], REFERENCE_SCHEMA
+        self._insert(
+            self.references_path,
+            (ref_id, form_title, dt.datetime.now(dt.timezone.utc)),
+            REFERENCE_SCHEMA,
         )
-        row.write.mode("append").parquet(self.references_path)
         return ref_id
 
     def chat_history(self, email: str) -> DataFrame:

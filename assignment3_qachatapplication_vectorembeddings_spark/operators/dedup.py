@@ -983,7 +983,7 @@ def connected_components(
       O(diameter) rounds, one join + one groupBy each, lineage cut per
       round (the standard big-graph CC shape).
     """
-    from ..runtime import register_materialized
+    from ..runtime import local_frame, register_materialized
 
     # materialize the RAW pair list, not the doubled+distinct edge
     # table: union-find is direction- and duplicate-insensitive, so the
@@ -1013,9 +1013,7 @@ def connected_components(
     if len(head) > probe_cap and probe_cap < driver_threshold:
         head = pairs_ckpt.limit(driver_threshold + 1).collect()
     if not head:
-        return pairs.sparkSession.createDataFrame(
-            [], "doc_id long, component long"
-        )
+        return local_frame(pairs.sparkSession, [], "doc_id long, component long")
     if len(head) <= driver_threshold:
         parent: dict = {}
 
@@ -1033,8 +1031,8 @@ def connected_components(
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
         rows = [(x, find(x)) for x in sorted(parent)]
-        return pairs.sparkSession.createDataFrame(
-            rows, "doc_id long, component long"
+        return local_frame(
+            pairs.sparkSession, rows, "doc_id long, component long"
         )
     edges = (
         pairs_ckpt.unionByName(

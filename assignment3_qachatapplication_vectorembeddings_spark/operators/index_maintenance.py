@@ -64,6 +64,7 @@ from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from ..schemas import FORM_CATALOG_SCHEMA, INDEX_SCHEMA
@@ -191,6 +192,14 @@ class VectorIndex:
         # re-entrancy marker is per-thread: two threads sharing one
         # VectorIndex must still contend for the file lock
         self._lock_tls = threading.local()
+        # immutable-metadata caches: the path's scheme never changes,
+        # and a published generation dir is never rewritten, so its
+        # inferred read schema holds for its lifetime (the schema cache
+        # is bounded to the dirs the last-loaded manifest names)
+        self._scheme_name: str | None = None
+        self._manifest_parse_cache: dict[int, dict] = {}
+        self._gen_schemas: dict[str, StructType] = {}
+        self._live_gen_dirs: set[str] = set()
 
     # -- filesystem plumbing ----------------------------------------------
 
@@ -201,6 +210,15 @@ class VectorIndex:
         return path.getFileSystem(hconf), jvm
 
     def _scheme(self) -> str:
+        """The index path's filesystem scheme, resolved once per
+        instance: every metadata file operation asks (via
+        :meth:`_local`), and the scheme-less case costs a py4j
+        FileSystem lookup each time."""
+        if self._scheme_name is None:
+            self._scheme_name = self._resolve_scheme()
+        return self._scheme_name
+
+    def _resolve_scheme(self) -> str:
         if "://" in self.path:
             return self.path.split("://", 1)[0]
         if self.path.startswith("file:"):
@@ -458,12 +476,11 @@ class VectorIndex:
         saves is the store read, not the copy)."""
         import copy
 
-        cache = getattr(self, "_manifest_parse_cache", None)
-        if cache is None:
-            cache = self._manifest_parse_cache = {}
+        cache = self._manifest_parse_cache
         for version in reversed(self._manifest_versions()):
             hit = cache.get(version)
             if hit is not None:
+                self._bound_gen_schemas(hit)
                 return version, copy.deepcopy(hit)
             data = self._read_small_file(
                 f"{self.manifest_dir}/{self._manifest_name(version)}"
@@ -478,8 +495,19 @@ class VectorIndex:
                 cache[version] = payload
                 for v in sorted(cache)[:-4]:  # bound: the live tail
                     del cache[v]
+                self._bound_gen_schemas(payload)
                 return version, copy.deepcopy(payload)
         return None
+
+    def _bound_gen_schemas(self, payload: dict) -> None:
+        """Record the generation dirs the newest manifest names, and
+        drop cached schemas of dirs it no longer names (superseded or
+        vacuumed generations). Snapshot-then-pop, so a thread sharing
+        this handle may insert concurrently."""
+        live = self._live_gen_dirs = set(payload["partitions"].values())
+        for d in list(self._gen_schemas):
+            if d not in live:
+                self._gen_schemas.pop(d, None)
 
     #: sentinel: "carry the current manifest's dim stamp forward"
     _KEEP_DIM = object()
@@ -1173,13 +1201,22 @@ class VectorIndex:
             by_dir.setdefault(d, []).append(t)
         frames = []
         for d, ts in by_dir.items():
-            # NB: no explicit read schema here — the vector column's
-            # element type follows whatever the caller upserted (float
-            # or double; round-9 tried pinning array<float> and the
+            # NB: no fixed read schema — the vector column's element
+            # type follows whatever the caller upserted (float or
+            # double; round-9 tried pinning array<float> and the
             # double-vector streaming-ingest suites caught it), so the
-            # footer inference is load-bearing.
+            # footer inference is load-bearing. It runs once per
+            # generation dir (a 1-task job); the dir is immutable, so
+            # later reads reuse the inferred schema.
+            schema = self._gen_schemas.get(d)
+            reader = self.spark.read
+            if schema is not None:
+                reader = reader.schema(schema)
+            raw = reader.parquet(f"{self.path}/{d}")
+            if schema is None and d in self._live_gen_dirs:
+                self._gen_schemas[d] = raw.schema
             df = (
-                self.spark.read.parquet(f"{self.path}/{d}")
+                raw
                 .select(
                     "id",
                     "vector",

@@ -6,8 +6,10 @@ filter (T1) → '\n'-join the match texts, build the prompt
 ``f"{context} \n\n Question: {q}"`` (F14) → chat completion (M3).
 
 Spark-first: one DataFrame expression — partition-pruned scan (title
-filter) → cosine score → TakeOrderedAndProject limit k → context
-assembly via ``concat_ws`` aggregation. The answer model is injected
+filter) → cosine score → TakeOrderedAndProject limit k — and ONE
+bounded collect of its ≤k rows; the context is the '\n'-join of their
+texts in (score desc, id asc) order, assembled on the driver (the
+same order ``ask_batch`` assembles in Spark). The answer model is injected
 (``answer_fn``); the default is a deterministic extractive stub so the
 whole path runs offline. Production wires
 :class:`~..functions.answering.OpenAIShapedAnswerer` — the ready-made
@@ -30,15 +32,11 @@ __all__ = ["QAPipeline", "assemble_context"]
 DEFAULT_TOP_K = 2  # QA_using_pinecone.py:31
 
 
-def assemble_context(matches: DataFrame, question: str, text_col: str = "text") -> str:
-    """F14 (QA_using_pinecone.py:45-50): '\n'-joined match texts in
-    score order, then the prompt template."""
-    row = (
-        matches.orderBy(F.desc("score"))
-        .agg(F.concat_ws("\n", F.collect_list(text_col)).alias("ctx"))
-        .head()
-    )
-    context = row["ctx"] if row else ""
+def assemble_context(texts: Sequence[str], question: str) -> str:
+    """F14 (QA_using_pinecone.py:45-50): the match texts, already in
+    rank order, '\n'-joined, then the prompt template. NULL texts are
+    skipped (``concat_ws`` semantics, as ``ask_batch`` assembles)."""
+    context = "\n".join(t for t in texts if t is not None)
     return f"{context} \n\n Question: {question}"
 
 
@@ -504,20 +502,22 @@ class QAPipeline:
         )
 
     def ask(self, question: str, form_titles: Sequence[str] | None = None) -> dict:
-        """One /askQuestion round trip. On the accelerated path this
-        spans several Spark actions (context head, answer_fn, match
-        collect) with a user hook in the middle, so it pins its inputs
-        for the whole duration:
+        """One /askQuestion round trip: ONE Spark action — a bounded
+        collect of :meth:`search`'s ≤k rows, ranked on the driver by
+        (score desc, id asc), the order :meth:`ask_batch` uses — then
+        the prompt from those rows and ``answer_fn``. Nothing is cached,
+        so nothing needs unpersisting when ``answer_fn`` raises.
+
+        The collect still reads pinned snapshots, so the leases stay:
 
         - a derived :meth:`~..operators.index_sync._SyncedIndexBase.
-          reader_lease` keeps a refresh+vacuum landing between the
-          actions (or inside ``answer_fn``) from reclaiming the meta/
-          segments this request resolved; under ``ann_policy='refresh'``
-          the catch-up runs BEFORE the lease so the pinned meta is the
-          one served;
+          reader_lease` keeps a refresh+vacuum landing between meta
+          resolution and the collect from reclaiming the meta/segments
+          this request resolved; under ``ann_policy='refresh'`` the
+          catch-up runs BEFORE the lease so the pinned meta is the one
+          served;
         - a primary ``reader_lease`` keeps a primary vacuum from
-          reclaiming the generations the exact re-rank reads (a cached
-          plan recomputed under memory pressure re-scans them).
+          reclaiming the generations the pinned exact re-rank reads.
 
         Residual (documented, bounded by the stores' min-age
         retention): a commit landing between the refresh and the
@@ -539,21 +539,18 @@ class QAPipeline:
             if self.ann_index is not None or self.text_index is not None:
                 # primary lease whenever ANY derived index is in play:
                 # both the exact re-rank and the bm25 text join read
-                # primary generations across the multi-action span
+                # primary generations
                 stack.enter_context(self.index.reader_lease())
-            matches = self.search(question, form_titles).cache()
-            # unpersist even when answer_fn / the match collect raises —
-            # a long-lived server must not leak block-manager entries on
-            # every failed /askQuestion
-            stack.callback(matches.unpersist)
-            prompt = assemble_context(matches, question)
-            answer = self.answer_fn(prompt)
-            out = {
-                "question": question,
-                "answer": answer,
-                "matches": [
-                    (r["id"], r["title"], round(r["score"], 6))
-                    for r in matches.select("id", "title", "score").collect()
-                ],
-            }
-        return out
+            rows = (
+                self.search(question, form_titles)
+                .select("id", "title", "text", "score")
+                .collect()  # ≤ top_k rows: the search's limit bounds it
+            )
+        rows.sort(key=lambda r: (-r["score"], r["id"]))
+        prompt = assemble_context([r["text"] for r in rows], question)
+        answer = self.answer_fn(prompt)
+        return {
+            "question": question,
+            "answer": answer,
+            "matches": [(r["id"], r["title"], round(r["score"], 6)) for r in rows],
+        }

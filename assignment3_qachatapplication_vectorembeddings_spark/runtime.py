@@ -1,4 +1,5 @@
-"""Shared runtime bookkeeping: the materialized-intermediate registry.
+"""Shared runtime bookkeeping: the materialized-intermediate registry,
+and the one way to turn driver-built rows into a DataFrame.
 
 Operators that persist() or eagerly localCheckpoint() an intermediate
 (bm25's per-doc table, the dedup shingle/bucket/candidate checkpoints)
@@ -16,7 +17,7 @@ returned DataFrame after calling release_caches().
 
 from __future__ import annotations
 
-__all__ = ["register_materialized", "release_caches"]
+__all__ = ["local_frame", "register_materialized", "release_caches"]
 
 _MATERIALIZED: list = []
 
@@ -44,3 +45,18 @@ def release_caches() -> int:
         except Exception:
             pass
     return n
+
+
+def local_frame(spark, rows, schema):
+    """Driver-built ``rows`` (tuples in ``schema`` field order) as a
+    DataFrame, shipped through pandas and Arrow: one columnar batch per
+    slice, no row pickling and no Python worker — a handful of rows
+    lands as ONE partition, so a one-row insert writes one file.
+    ``schema`` is a StructType or a DDL string."""
+    import pandas as pd
+    from pyspark.sql.types import DataType
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    pdf = pd.DataFrame.from_records(list(rows), columns=schema.fieldNames())
+    return spark.createDataFrame(pdf, schema)

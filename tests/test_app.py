@@ -3,23 +3,27 @@
 from __future__ import annotations
 
 import json
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from assignment3_qachatapplication_vectorembeddings_spark.cli import main as cli_main
+from assignment3_qachatapplication_vectorembeddings_spark.functions.embedding import (
+    HashingEmbedder,
+)
+from assignment3_qachatapplication_vectorembeddings_spark.operators.index_maintenance import (
+    VectorIndex,
+)
 from assignment3_qachatapplication_vectorembeddings_spark.plans.app import QAChatApp
 from assignment3_qachatapplication_vectorembeddings_spark.plans.pipeline2 import (
     upsert_from_chunks,
 )
+from assignment3_qachatapplication_vectorembeddings_spark.plans.qa import QAPipeline
 
 
 @pytest.fixture(scope="module")
 def app(spark, tmp_path_factory):
-    from assignment3_qachatapplication_vectorembeddings_spark.functions.embedding import (
-        HashingEmbedder,
-    )
-
     base = str(tmp_path_factory.mktemp("app"))
     app = QAChatApp(spark, base, secret="test-secret", embedder=HashingEmbedder(dim=4))
     chunks = spark.createDataFrame(
@@ -110,7 +114,7 @@ def test_cli_pipeline1_pipeline2_ask(spark, tmp_path, capsys):
     assert ans["matches"]
 
 
-def test_batch_qa_matches_single_question_path(spark, app):
+def test_batch_qa_matches_single_question_path(spark, app, tmp_path):
     questions = spark.createDataFrame(
         [("how is revenue?",), ("what about cash flow?",)], "question string"
     )
@@ -121,3 +125,114 @@ def test_batch_qa_matches_single_question_path(spark, app):
     for q in by_q:
         single = app.qa.ask(q)
         assert by_q[q] == single["answer"]
+
+    # tied scores: two chunks with the same vector score equal for every
+    # question. Both paths rank ties by id ascending, so the prompts
+    # (answer_fn echoes them) are identical, whatever the insert order.
+    tie = VectorIndex(spark, str(tmp_path / "tie"))
+    tie.upsert(
+        spark.createDataFrame(
+            [
+                ("tie_b", [0.5, 0.5, 0.5, 0.5], "gamma", "second by id"),
+                ("tie_a", [0.5, 0.5, 0.5, 0.5], "gamma", "first by id"),
+            ],
+            "id string, vector array<float>, title string, text string",
+        )
+    )
+    qa = QAPipeline(tie, embedder=app.qa.embedder, answer_fn=lambda p: p)
+    q = "how is revenue?"
+    single = qa.ask(q)
+    (batch,) = qa.ask_batch(
+        spark.createDataFrame([(q,)], "question string")
+    ).collect()
+    assert single["answer"] == batch["answer"]
+    assert single["answer"] == f"first by id\nsecond by id \n\n Question: {q}"
+    assert [m[0] for m in single["matches"]] == ["tie_a", "tie_b"]
+
+
+def _job_ids(spark, group: str, fn) -> list:
+    """Spark job ids launched by ``fn()`` (job group + statusTracker)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+@pytest.fixture()
+def synced_app(spark, tmp_path):
+    """The served shape: a primary with synced IVFPQ and BM25 indexes,
+    a registered user's token, and one warm-up ask behind it."""
+    from assignment3_qachatapplication_vectorembeddings_spark.operators.index_sync import (
+        SyncedIvfpqIndex,
+        SyncedTextIndex,
+    )
+
+    emb = HashingEmbedder(dim=16)
+    base = str(tmp_path)
+    app = QAChatApp(spark, base, secret="test-secret", embedder=emb)
+    texts = [
+        (f"{form}_{i}", form, f"{form} chunk {i} about {topic}")
+        for form, topic in [
+            ("formA", "spark windows"),
+            ("formB", "join strategies"),
+            ("formC", "vector search"),
+        ]
+        for i in range(8)
+    ]
+    app.index.upsert(
+        spark.createDataFrame(
+            [(i, emb.embed_one(text), form, text) for i, form, text in texts],
+            "id string, vector array<float>, title string, text string",
+        )
+    )
+    ann = SyncedIvfpqIndex(app.index, f"{base}/ann", nlist=4, m=4, nbits=4)
+    ann.build()
+    tix = SyncedTextIndex(app.index, f"{base}/tix", buckets=8)
+    tix.build()
+    app.qa = QAPipeline(
+        app.index,
+        embedder=emb,
+        ann_index=ann,
+        ann_policy="serve",
+        ann_nprobe=4,
+        text_index=tix,
+    )
+    app.register("jobs@test.com", "S3cret!pw")
+    token = app.login("jobs@test.com", "S3cret!pw")
+    app.ask_question(token, "spark windows", ["formA", "formB"])
+    return app, token
+
+
+def test_ask_question_runs_at_most_six_spark_jobs(spark, synced_app):
+    """One warm /askQuestion over synced IVFPQ+BM25 indexes: token user
+    lookup (1 job), ONE bounded match collect (the search plan's own
+    stages) and the chat insert (top-1 id + one-file append) — at most
+    6 Spark jobs in all. A second action on the matches, a cached
+    frame, a per-read schema inference or an aggregate id allocation
+    each push it over."""
+    app, token = synced_app
+    out = {}
+
+    def ask():
+        out.update(app.ask_question(token, "join strategies", ["formB", "formC"]))
+
+    ids = _job_ids(spark, "one-ask", ask)
+    assert len(ids) <= 6, ids
+    assert out["matches"] and {m[1] for m in out["matches"]} <= {"formB", "formC"}
+    assert out["matches"][0][0].startswith("formB_")
+
+
+def test_add_chat_appends_one_parquet_file(synced_app):
+    app, _token = synced_app
+    chats = Path(app.auth.chats_path)
+
+    def n_files():
+        return len(list(chats.glob("*.parquet")))
+
+    before = n_files()
+    app.auth.add_chat(1, "q", "a")
+    assert n_files() == before + 1

@@ -3,7 +3,12 @@ main.py endpoints re-expressed over engine tables)."""
 
 from __future__ import annotations
 
+import datetime as dt
+import os
+import time
+
 import pytest
+from pyspark.sql import functions as F
 
 from assignment3_qachatapplication_vectorembeddings_spark.functions.crypto import (
     create_access_token,
@@ -98,3 +103,31 @@ def test_p7_registration_validation(spark, tmp_path):
     with pytest.raises(ValueError, match="Invalid password"):
         auth.register("ok@x.com", "weakpw")
     assert auth.register("ok@x.com", "abc$e") >= 1
+
+
+def test_created_datetime_is_utc_under_non_utc_host_zone(spark, tmp_path):
+    """Insert timestamps are tz-aware UTC: with the Python process in a
+    non-UTC zone, every stored ``created_datetime`` still reads back
+    (rendered in the UTC session zone) as the UTC wall time written —
+    not shifted by the host's offset."""
+    store = AuthStore(spark, str(tmp_path / "auth"), secret="test-secret")
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        before = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+        user_id = store.register("tz@test.com", "S3cret!pw")
+        store.add_chat(user_id, "q", "a")
+        store.add_reference("tz form")
+        after = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    for table in (store.users(), store.chats(), store.references()):
+        (rendered,) = table.select(
+            F.col("created_datetime").cast("string")
+        ).first()
+        assert before <= dt.datetime.fromisoformat(rendered) <= after

@@ -3,9 +3,9 @@ loop over ``QAChatApp.ask_question`` / ``chat_answers`` with periodic
 index maintenance (refresh / compact / vacuum / writer churn), tracking
 driver RSS and Spark block-manager entries over time.
 
-The round-6/7 leak claims (bm25 parse-cache memo bound; ``ask()``
-unpersists its pinned matches in a finally; leases released on every
-path) were proven per-call by pytest — this tool proves them OVER TIME:
+The leak claims (bm25 parse-cache memo bound; ``ask()`` caches nothing
+— one bounded collect per ask; leases released on every path) were
+proven per-call by pytest — this tool proves them OVER TIME:
 after a warm-up, both RSS and the persistent-RDD count must PLATEAU.
 A per-ask leak of even one cached plan or block shows up as a monotonic
 ramp across hundreds of asks and fails the embedded assertions.
@@ -155,7 +155,7 @@ def main() -> int:
 
     # plateau assertions: mean RSS over the last quarter vs the second
     # quarter (both past warm-up) must be within 10%; the block-manager
-    # must not accumulate entries (every ask unpersists in finally)
+    # must not accumulate entries (an ask persists nothing)
     q2 = [s["rss_mb"] for s in samples[len(samples) // 4 : len(samples) // 2]]
     q4 = [s["rss_mb"] for s in samples[3 * len(samples) // 4 :]]
     rss_q2 = sum(q2) / max(len(q2), 1)
@@ -174,7 +174,7 @@ def main() -> int:
     if out["blocks_end"] > 2:
         out["FAIL"] = (
             f"{out['blocks_end']} persistent blocks at end — "
-            "an ask leaked its pinned matches"
+            "an ask leaked a persisted frame"
         )
         ok = False
     print(json.dumps(out))
